@@ -202,13 +202,10 @@ object Bench {
       repCpuMs.map(ms => ms > 0 && ms <= nominalMs * 1.4).toSeq
     val repExcluded =
       if (repClean.exists(identity)) repClean.count(c => !c) else 0
-    def faceMedian(name: String, excludeContended: Boolean): Double = {
-      val ts = passes.zip(repClean).flatMap { case (p, clean) =>
-        if (excludeContended && !clean) None
-        else p.collectFirst { case (`name`, t) if t >= 0 => t }
-      }
-      if (ts.nonEmpty) median(ts) else -1.0
-    }
+    def perRep(name: String): Seq[Double] =
+      passes.map(p => p.collectFirst { case (`name`, t) => t }.getOrElse(-1.0))
+    def faceMedian(name: String, excludeContended: Boolean): Double =
+      graft.tools.BenchNorm.faceMedian(perRep(name), repClean, excludeContended)
     // per-query median across reps; a query counts only reps where it ran
     val resultsAllReps = ordered.map { case (name, _) =>
       name -> faceMedian(name, excludeContended = false)
@@ -224,10 +221,8 @@ object Bench {
     // code) cannot print as a face regression. Arithmetic lives in
     // tools.BenchNorm; BenchNormSpec pins it.
     val resultsNorm = ordered.map { case (name, _) =>
-      val perRep = passes.map(p =>
-        p.collectFirst { case (`name`, t) => t }.getOrElse(-1.0))
       name -> graft.tools.BenchNorm.normalizedMedianSec(
-        perRep, repCpuMs.toSeq, nominalMs)
+        perRep(name), repCpuMs.toSeq, nominalMs)
     }
     // OFFICIAL table: per-face MIN of the normalized medians across all
     // SAME-CODE, SAME-SF runs in BENCH_HISTORY plus this one — residual

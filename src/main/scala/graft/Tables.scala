@@ -66,13 +66,18 @@ object Tables {
     * exchange-free plans (FanoutProbe r17: for q01-class aggregates the
     * exchange costs what the parallelism saves — this helper is only for
     * faces whose per-row compute dominates). Driver-side file metadata
-    * only; no extra Spark job. */
+    * only, through each file's Hadoop FileSystem (so hdfs:// and s3a://
+    * inputs size correctly); a file that cannot be sized counts as large.
+    * No extra Spark job. */
   def fanOutSmallScan(df: DataFrame, bytesPerCore: Long = 8L << 20): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val files = try df.inputFiles catch { case _: Exception => Array.empty[String] }
+    val conf = df.sparkSession.sessionState.newHadoopConf()
     val bytes = files.foldLeft(0L) { (acc, u) =>
-      val len = try new java.io.File(new java.net.URI(u).getPath).length
-        catch { case _: Exception => Long.MaxValue / 4096 }
+      val len = try {
+        val p = new org.apache.hadoop.fs.Path(u)
+        p.getFileSystem(conf).getFileStatus(p).getLen
+      } catch { case _: Exception => Long.MaxValue / 4096 }
       acc + len
     }
     if (files.nonEmpty && files.length < cores / 2 &&

@@ -11,8 +11,8 @@ import graft.sources.xlsx.XCell
 /** OpenDocument spreadsheet (.ods) content parser — the second container
   * format of the spreadsheet family. Reads `content.xml` with StAX and
   * emits rows as the SAME [[XCell]] values the xlsx path uses, so schema
-  * inference, NULL/coercion rules and the DSv2 conversion layer are shared
-  * verbatim (XlsxSchema.fromProbe / XlsxPartitionReader.convert).
+  * inference, NULL/coercion rules and the whole DSv2 stack are shared
+  * verbatim ([[OdsFormat]] is the ods side of the one seam).
   *
   * ODS specifics handled here, per OASIS ODF 1.2 §9.1.3-9.1.4:
   *   - `table:number-columns-repeated` / `table:number-rows-repeated`

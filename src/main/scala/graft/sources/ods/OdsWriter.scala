@@ -16,7 +16,7 @@ object OdsWriter {
   private val Mimetype = "application/vnd.oasis.opendocument.spreadsheet"
 
   final class StreamingOdsWriter(out: OutputStream, tableName: String,
-      header: Option[Seq[String]]) {
+      header: Option[Seq[String]]) extends graft.sources.xlsx.SheetWriter {
     private val zip = new ZipOutputStream(out, StandardCharsets.UTF_8)
     private val w = {
       // mimetype MUST be first and STORED so magic-byte sniffers see it

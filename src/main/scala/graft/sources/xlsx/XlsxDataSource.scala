@@ -1,22 +1,11 @@
 package graft.sources.xlsx
 
-import java.util
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.jdk.CollectionConverters._
 
 /** `spark.read.format("xlsx")` / `df.write.format("xlsx")` — DataSource V2
   * re-expression of the reference's `sheetreader()` table function
@@ -36,67 +25,58 @@ import scala.jdk.CollectionConverters._
   *   - Multi-file scans (directory / glob) are a superset of the reference,
   *     which errors on more than one file (:650).
   */
-final class XlsxDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "xlsx"
-  override def supportsExternalMetadata(): Boolean = true
+final class XlsxDataSource extends SheetDataSource(XlsxFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = XlsxDataSource.resolvePaths(options)
-    if (paths.isEmpty)
-      throw new IllegalArgumentException(
-        "xlsx: no input files found — schema inference needs at least one " +
-          "workbook. To stream a drop-box directory that starts empty, " +
-          "supply the schema explicitly with .schema(...)")
-    val opts = XlsxOptions.from(options)
-    // Schema from the first file only — at scale you cannot open 10^6 files
-    // at planning time; files are expected to be schema-homogeneous.
-    val base = XlsxSchema.resolve(
-      XlsxDataSource.workbook(paths.head, XlsxDataSource.hadoopConf(),
-        opts.maxSharedStringsBytes), opts).schema
-    if (opts.allSheets)
-      StructType(base.fields :+
-        StructField(XlsxDataSource.SheetNameCol, StringType, nullable = false))
-    else base
+/** The xlsx container: SpreadsheetML worksheets in a zip, read by the
+  * byte-level [[SheetScanner]], its chunked [[ParallelSheetScanner]] and
+  * segment-range slices of indexed workbooks. */
+object XlsxFormat extends SheetFormat {
+  override val name = "xlsx"
+  override val streaming = true
+  override val noInputFiles: String =
+    "xlsx: no input files found — schema inference needs at least one " +
+      "workbook. To stream a drop-box directory that starts empty, " +
+      "supply the schema explicitly with .schema(...)"
+
+  override def schema(path: String, opts: XlsxOptions): StructType =
+    XlsxSchema.resolve(XlsxDataSource.workbook(path, XlsxDataSource.hadoopConf(),
+      opts.maxSharedStringsBytes), opts).schema
+
+  override def partitions(paths: Seq[String], opts: XlsxOptions): Array[InputPartition] =
+    XlsxScan.partitionsFor(paths, opts)
+
+  /** A segment-range partition reads its bounded slice sequentially (the
+    * split IS the parallelism); `threads >= 2` on a byte-scannable entry
+    * opens the parallel scanner with worker-side batching; else the
+    * sequential scanner. */
+  override def open(p: XlsxInputPartition, opts: XlsxOptions, conf: Configuration,
+      batch: (Array[Array[XCell]], Int) => AnyRef): SheetFormat.Opened = {
+    val wb = XlsxDataSource.workbook(p.path, conf, opts.maxSharedStringsBytes)
+    val resolved = XlsxSchema.resolve(wb, opts, p.sheet.map(_.target))
+    val target = p.sheet.map(_.target).getOrElse(
+      wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
+    val rows = p.segRange match {
+      case Some(r) =>
+        Left(wb.segmentRangeRowIterator(target, r.s0, r.s1).getOrElse(
+          throw new IllegalStateException(
+            s"${p.path}: segment index vanished for range [${r.s0},${r.s1}) — " +
+              "a whole-file fallback would DUPLICATE rows across partitions")))
+      case None if p.threads >= 2 =>
+        wb.chunkingRowIterator(target, p.threads, batch,
+          resolved.dropRows.toLong, opts.chunkBytes)
+      case None => Left(wb.rowIterator(target))
+    }
+    SheetFormat.Opened(resolved, rows)
   }
 
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val map = new CaseInsensitiveStringMap(properties)
-    new XlsxTable(schema, XlsxOptions.from(map), map)
-  }
+  override def writer(out: java.io.OutputStream, sheetName: String,
+      header: Option[Seq[String]]): SheetWriter =
+    new XlsxWriter.StreamingWorkbookWriter(out, sheetName, header)
 }
 
 object XlsxDataSource {
   /** Name of the per-row sheet column the allSheets scan appends. */
   val SheetNameCol = "_sheet_name"
-
-  /** All concrete .xlsx file paths for the scan: each entry may be a file, a
-    * directory (expanded non-recursively to its *.xlsx members) or a glob. */
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val raw: Seq[String] =
-      Option(options.get("paths")).map(parseJsonStringArray).getOrElse(
-        Option(options.get("path")).toSeq)
-    val conf = hadoopConf()
-    raw.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      matched.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq
-            .filter(f => f.isFile && f.getPath.getName.toLowerCase.endsWith(".xlsx"))
-            .map(_.getPath.toString)
-        else Seq(st.getPath.toString)
-      }
-    }.sorted
-  }
-
-  private def parseJsonStringArray(json: String): Seq[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    mapper.readValue(json, classOf[Array[String]]).toSeq
-  }
 
   def hadoopConf(): Configuration =
     SparkSession.getActiveSession
@@ -135,84 +115,6 @@ object XlsxDataSource {
       p.getFileSystem(conf).open(p)
     }, local, maxSharedStringsBytes)
   }
-}
-
-final class XlsxTable(
-    schema: StructType,
-    opts: XlsxOptions,
-    options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
-
-  override def name(): String = s"xlsx:${Option(options.get("path")).getOrElse("")}"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ).asJava
-
-  override def newScanBuilder(caseInsensitiveStringMap: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsxScanBuilder(schema, opts,
-      XlsxDataSource.resolvePaths(caseInsensitiveStringMap), caseInsensitiveStringMap)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new XlsxWriteBuilder(
-      Option(info.options.get("path")).getOrElse(
-        throw new IllegalArgumentException("xlsx write requires a path")),
-      info.schema(), opts)
-}
-
-final class XlsxScanBuilder(fullSchema: StructType, opts: XlsxOptions, paths: Seq[String],
-    options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = fullSchema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // Preserve fullSchema field order; Spark passes a subset.
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(fullSchema.fields.filter(f => keep.contains(f.name)))
-  }
-
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(XlsxFilterEval.supported(fullSchema, _))
-    // everything also stays residual: the reader's evaluation is a pure
-    // early-skip optimization, Spark still re-checks
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan =
-    new XlsxScan(fullSchema, required, opts, paths, pushed, options)
-}
-
-final class XlsxScan(
-    fullSchema: StructType,
-    required: StructType,
-    opts: XlsxOptions,
-    paths: Seq[String],
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    options: CaseInsensitiveStringMap)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"xlsx scan of ${paths.size} file(s), PushedFilters: [${filters.mkString(", ")}]"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    XlsxScan.partitionsFor(paths, opts)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), filters, columnar = true)
-
-  /** Streaming face: the same scan over files arriving in a directory —
-    * each micro-batch is the set of not-yet-seen files (one partition per
-    * file, or per (file, sheet) under allSheets), the arrival pattern of a
-    * spreadsheet drop-box. */
-  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new XlsxMicroBatchStream(fullSchema, required, opts, options, filters,
-      checkpointLocation)
 }
 
 object XlsxScan {
@@ -383,6 +285,7 @@ final case class SheetRef(name: String, target: String)
   * the parallelism, scheduled and retried like any other Spark task. */
 final case class SegRange(s0: Int, s1: Int, rowsBefore: Long)
 
+/** One partition of a spreadsheet scan; ods partitions carry only `path`. */
 final case class XlsxInputPartition(path: String, sheet: Option[SheetRef] = None,
     /** Intra-file parse workers for THIS partition (planner-assigned). */
     threads: Int = 1,
@@ -390,210 +293,7 @@ final case class XlsxInputPartition(path: String, sheet: Option[SheetRef] = None
     segRange: Option[SegRange] = None)
     extends InputPartition
 
-final class XlsxPartitionReaderFactory(
-    fullSchema: StructType,
-    required: StructType,
-    opts: XlsxOptions,
-    conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    /** Batch scans read columnar (ColumnarBatch per parse chunk, Spark
-      * inserts codegen'd ColumnarToRow — the same shape as the built-in
-      * vectorized parquet reader); the streaming face keeps the row path. */
-    columnar: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[XlsxInputPartition]
-    new XlsxPartitionReader(p.path, p.sheet, fullSchema, required, opts, conf,
-      filters, p.threads, p.segRange)
-  }
-
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
-
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[XlsxInputPartition]
-    new XlsxColumnarPartitionReader(p.path, p.sheet, fullSchema, required, opts,
-      conf, filters, p.threads, p.segRange)
-  }
-}
-
-/** Streams one file's target sheet. Each file re-resolves its own header
-  * (cheap 2-row probe) so multi-file scans tolerate per-file header rows;
-  * column mapping is positional, like the reference.
-  */
-final class XlsxPartitionReader(
-    path: String,
-    sheet: Option[SheetRef],
-    fullSchema: StructType,
-    required: StructType,
-    opts: XlsxOptions,
-    conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    /** planner-assigned intra-file parse workers (explicit option or auto) */
-    threads: Int = 1,
-    /** segment-range slice of an indexed workbook (splittable path) */
-    segRange: Option[SegRange] = None)
-    extends PartitionReader[InternalRow] {
-
-  private val wb = XlsxDataSource.workbook(path, conf.toConf,
-    opts.maxSharedStringsBytes)
-  private val resolved = XlsxSchema.resolve(wb, opts, sheet.map(_.target))
-  /** Header/skipRows prefix still owed by THIS partition: ranged
-    * partitions subtract the rows earlier ranges already cover. */
-  private val effDropRows: Long =
-    segRange.map(r => math.max(0L, resolved.dropRows.toLong - r.rowsBefore))
-      .getOrElse(resolved.dropRows.toLong)
-  private val sheetTarget = sheet.map(_.target).getOrElse(
-    wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
-  private val sheetNameValue: UTF8String =
-    UTF8String.fromString(sheet.map(_.name).getOrElse(""))
-  // positional index of each required column in the sheet; -1 marks the
-  // allSheets metadata column, which has no sheet position. Sheet
-  // positions count only DATA columns: a user-supplied schema may place
-  // _sheet_name anywhere, and fieldIndex over the full schema would then
-  // shift every column after it.
-  private val dataFieldNames: Array[String] =
-    if (opts.allSheets)
-      fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
-    else fullSchema.fieldNames
-  private val colIdx: Array[Int] = required.fieldNames.map { n =>
-    if (opts.allSheets && n == XlsxDataSource.SheetNameCol) -1
-    else dataFieldNames.indexOf(n)
-  }
-  private val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  // filters whose columns survive pruning can be evaluated on the row
-  private val requiredIdx: Map[String, Int] =
-    required.fieldNames.zipWithIndex.toMap
-  private val evaluable = filters.filter(_.references.forall(requiredIdx.contains))
-
-  /** Cell row → Catalyst values for the required columns — runs on the
-    * consumer thread for sequential scans, INSIDE the parse workers for
-    * `threads >= 2` (it is the per-cell match/boxing hot loop, and
-    * serializing it on one thread would cap the parallel scan). */
-  private def convertCells(cells: Array[XCell]): Array[Any] = {
-    val values = new Array[Any](colIdx.length)
-    var i = 0
-    while (i < colIdx.length) {
-      val c = colIdx(i)
-      values(i) =
-        if (c < 0) sheetNameValue
-        else {
-          val cell: XCell = if (c < cells.length) cells(c) else XCell.XNone
-          XlsxPartitionReader.convert(cell, colTypes(i), opts.coerceToString)
-        }
-      i += 1
-    }
-    values
-  }
-
-  /** Worker-side cell row → UnsafeRow (threads >= 2 path), or null when a
-    * pushed filter rejects the row. Writing UnsafeRows IN the parse workers
-    * (unboxed typed writes, one buffer copy) instead of boxing into
-    * `Array[Any]` + GenericInternalRow moves the whole row-materialization
-    * cost off the sequential consumer thread, and Spark's scan-side unsafe
-    * projection then reads direct-memory fields instead of unboxing. A
-    * filtered row still produces an entry (null) so the consumer can count
-    * it toward skipRows and ragged-row checks. */
-  private def convertToUnsafe(cells: Array[XCell]): AnyRef = {
-    if (evaluable.nonEmpty) {
-      // convert ONLY the filter-referenced columns for the eval — a full
-      // convertCells pass here would box every column a second time and
-      // forfeit most of the unsafe-path gain on filtered scans
-      val get: String => Any = name => {
-        val i = requiredIdx(name)
-        val c = colIdx(i)
-        if (c < 0) sheetNameValue
-        else XlsxPartitionReader.convert(
-          if (c < cells.length) cells(c) else XCell.XNone,
-          colTypes(i), opts.coerceToString)
-      }
-      if (!evaluable.forall(XlsxFilterEval.eval(_, get))) return null
-    }
-    val w = localWriter.get()
-    w.reset()
-    w.zeroOutNullBytes()
-    var i = 0
-    while (i < colIdx.length) {
-      val c = colIdx(i)
-      if (c < 0) w.write(i, sheetNameValue)
-      else {
-        val cell: XCell = if (c < cells.length) cells(c) else XCell.XNone
-        XlsxPartitionReader.writeCell(w, i, cell, typeCodes(i), opts.coerceToString)
-      }
-      i += 1
-    }
-    w.getRow.copy()
-  }
-
-  private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
-  private val localWriter:
-      ThreadLocal[org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter] =
-    ThreadLocal.withInitial(() =>
-      new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(colIdx.length))
-
-  // segment-range partition: the sequential bounded-slice iterator (the
-  // split IS the parallelism); else threads >= 2 on a byte-scannable
-  // entry: parallel scanner with worker-side conversion; else sequential
-  private val iterE: Either[CellRowIterator, ParallelSheetScanner] =
-    segRange match {
-      case Some(r) =>
-        Left(wb.segmentRangeRowIterator(sheetTarget, r.s0, r.s1).getOrElse(
-          throw new IllegalStateException(
-            s"$path: segment index vanished for range [${r.s0},${r.s1}) — " +
-              "a whole-file fallback would DUPLICATE rows across partitions")))
-      case None if threads >= 2 =>
-        wb.convertingRowIterator(sheetTarget, threads,
-          cells => convertToUnsafe(cells), opts.chunkBytes)
-      case None => Left(wb.rowIterator(sheetTarget))
-    }
-  private val seqIter: CellRowIterator = iterE.left.toOption.orNull
-  private val parIter: ParallelSheetScanner = iterE.toOption.orNull
-
-  private var dropped = 0L
-  if (seqIter != null) {
-    while (dropped < effDropRows && seqIter.hasNext) {
-      seqIter.next(); dropped += 1
-    }
-  }
-  private var current: InternalRow = _
-
-  private def raggedCheck(rowIdx: Long, width: Int): Unit =
-    XlsxPartitionReader.raggedCheck(rowIdx, width, resolved.baseWidth)
-
-  private def accept(values: Array[Any]): Boolean = {
-    // pushed-filter early skip: drop non-matching rows before Spark sees them
-    val get: String => Any = name => values(requiredIdx(name))
-    if (evaluable.forall(XlsxFilterEval.eval(_, get))) {
-      current = new GenericInternalRow(values)
-      true
-    } else false
-  }
-
-  override def next(): Boolean = {
-    if (parIter != null) {
-      while (parIter.advance()) {
-        if (dropped < effDropRows) dropped += 1 // skipRows (converted needlessly; harmless)
-        else {
-          raggedCheck(parIter.rowIdx, parIter.rowWidth)
-          val row = parIter.rowConv // null = rejected by a pushed filter
-          if (row != null) { current = row.asInstanceOf[InternalRow]; return true }
-        }
-      }
-      false
-    } else {
-      while (seqIter.hasNext) {
-        val (rowIdx, cells) = seqIter.next()
-        raggedCheck(rowIdx, cells.length)
-        if (accept(convertCells(cells))) return true
-      }
-      false
-    }
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit =
-    if (parIter != null) parIter.close() else seqIter.close()
-}
-
+/** Cell → Catalyst rules of the spreadsheet scans, shared by both formats. */
 object XlsxPartitionReader {
   /** Cell → Catalyst value under the reference's compatibility rules
     * (TypesCompatible, sheetreader_extension.cpp:225-250): exact type match
@@ -625,10 +325,8 @@ object XlsxPartitionReader {
   final val TDouble = 0; final val TString = 1; final val TBool = 2
   final val TDate = 3; final val TLong = 4; final val TInt = 5; final val TFloat = 6
   // Catch-all for DataTypes with no xlsx representation (user-supplied
-  // TimestampType/DecimalType/... via supportsExternalMetadata): the boxed
-  // `convert` path reads them as NULL columns, so the unsafe path must too —
-  // throwing here would fail reader CONSTRUCTION even for threads=1, which
-  // never takes the unsafe path.
+  // TimestampType/DecimalType/... via supportsExternalMetadata): `convert`
+  // reads them as NULL, so the vector writer must too.
   final val TNull = 7
 
   def typeCode(dt: DataType): Int = dt match {
@@ -642,56 +340,10 @@ object XlsxPartitionReader {
     case _           => TNull
   }
 
-  /** Unboxed twin of [[convert]]: same value/NULL semantics, but writes the
-    * field straight into an UnsafeRowWriter. Every (code, cell) pair here
-    * MUST mirror the corresponding `convert` case — the differential ingest
-    * fuzz drives both paths over the same workbooks. */
-  def writeCell(
-      w: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter,
-      i: Int, cell: XCell, code: Int, coerce: Boolean): Unit = (code: @annotation.switch) match {
-    case TDouble => cell match {
-      case XCell.XNumber(d) => w.write(i, d)
-      case _ => w.setNullAt(i)
-    }
-    case TString => cell match {
-      case XCell.XString(s) => w.write(i, UTF8String.fromString(s))
-      case XCell.XNumber(d) if coerce =>
-        w.write(i, UTF8String.fromString(
-          String.format(java.util.Locale.ROOT, "%f", Double.box(d))))
-      case XCell.XBool(b) if coerce =>
-        w.write(i, UTF8String.fromString(if (b) "TRUE" else "FALSE"))
-      case XCell.XDate(serial) if coerce =>
-        w.write(i, UTF8String.fromString(
-          java.time.LocalDate.ofEpochDay(XCell.serialToEpochDay(serial).toLong).toString))
-      case _ => w.setNullAt(i)
-    }
-    case TBool => cell match {
-      case XCell.XBool(b) => w.write(i, b)
-      case _ => w.setNullAt(i)
-    }
-    case TDate => cell match {
-      case XCell.XDate(serial) => w.write(i, XCell.serialToEpochDay(serial))
-      case _ => w.setNullAt(i)
-    }
-    case TLong => cell match {
-      case XCell.XNumber(d) => w.write(i, d.toLong)
-      case _ => w.setNullAt(i)
-    }
-    case TInt => cell match {
-      case XCell.XNumber(d) => w.write(i, d.toInt)
-      case _ => w.setNullAt(i)
-    }
-    case TFloat => cell match {
-      case XCell.XNumber(d) => w.write(i, d.toFloat)
-      case _ => w.setNullAt(i)
-    }
-    case TNull => w.setNullAt(i)
-  }
-
-  /** Columnar twin of [[writeCell]]: same value/NULL semantics, writing the
-    * cell into a WritableColumnVector slot instead of an UnsafeRow field.
-    * Every (code, cell) pair MUST mirror `convert` — the xlsx oracle suite
-    * rides this path end-to-end for every batch scan. */
+  /** Unboxed twin of [[convert]]: same value/NULL semantics, writing the
+    * cell into a WritableColumnVector slot. Every (code, cell) pair MUST
+    * mirror `convert` — the xlsx oracle suite rides this path end-to-end
+    * for every batch scan. */
   def writeVector(
       v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
       i: Int, cell: XCell, code: Int, coerce: Boolean): Unit = (code: @annotation.switch) match {
@@ -744,269 +396,3 @@ object XlsxPartitionReader {
         s"Row ${rowIdx + 1} has more columns than the first row. " +
           s"Has: $width Expected: $baseWidth")
 }
-
-/** Columnar batch scan over one file's target sheet — the default batch-read
-  * path. With `threads >= 2` the parse workers build one ColumnarBatch per
-  * producer chunk ([[ParallelSheetScanner]]'s chunk face), so the consumer
-  * thread's per-row work drops to a metadata walk (row-index stitching +
-  * ragged checks) and Spark reads the batch through codegen'd ColumnarToRow —
-  * the vectorized-parquet shape, with no per-row InternalRow materialization
-  * anywhere on the sequential stages. Sequential scans (threads = 1, or the
-  * StAX/missing-entry fallback) batch consumer-side into reused vectors.
-  */
-final class XlsxColumnarPartitionReader(
-    path: String,
-    sheet: Option[SheetRef],
-    fullSchema: StructType,
-    required: StructType,
-    opts: XlsxOptions,
-    conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    threads: Int,
-    /** segment-range slice of an indexed workbook (splittable path) */
-    segRange: Option[SegRange] = None)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val wb = XlsxDataSource.workbook(path, conf.toConf,
-    opts.maxSharedStringsBytes)
-  private val resolved = XlsxSchema.resolve(wb, opts, sheet.map(_.target))
-  private val effDropRows: Long =
-    segRange.map(r => math.max(0L, resolved.dropRows.toLong - r.rowsBefore))
-      .getOrElse(resolved.dropRows.toLong)
-  private val sheetTarget = sheet.map(_.target).getOrElse(
-    wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
-  private val sheetNameBytes: Array[Byte] = sheet.map(_.name).getOrElse("")
-    .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  private val dataFieldNames: Array[String] =
-    if (opts.allSheets)
-      fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
-    else fullSchema.fieldNames
-  private val colIdx: Array[Int] = required.fieldNames.map { n =>
-    if (opts.allSheets && n == XlsxDataSource.SheetNameCol) -1
-    else dataFieldNames.indexOf(n)
-  }
-  private val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
-  private val requiredIdx: Map[String, Int] =
-    required.fieldNames.zipWithIndex.toMap
-  private val evaluable = filters.filter(_.references.forall(requiredIdx.contains))
-
-  /** Pushed-filter early skip on only the filter-referenced columns. */
-  private def passes(cells: Array[XCell]): Boolean =
-    evaluable.isEmpty || {
-      val get: String => Any = name => {
-        val i = requiredIdx(name)
-        val c = colIdx(i)
-        if (c < 0) UTF8String.fromBytes(sheetNameBytes)
-        else XlsxPartitionReader.convert(
-          if (c < cells.length) cells(c) else XCell.XNone,
-          colTypes(i), opts.coerceToString)
-      }
-      evaluable.forall(XlsxFilterEval.eval(_, get))
-    }
-
-  private def writeRow(vectors: Array[OnHeapColumnVector], out: Int,
-      cells: Array[XCell]): Unit = {
-    var j = 0
-    while (j < colIdx.length) {
-      val c = colIdx(j)
-      if (c < 0) vectors(j).putByteArray(out, sheetNameBytes)
-      else XlsxPartitionReader.writeVector(vectors(j), out,
-        if (c < cells.length) cells(c) else XCell.XNone,
-        typeCodes(j), opts.coerceToString)
-      j += 1
-    }
-  }
-
-  /** Worker-side chunk transform: parsed rows → one ColumnarBatch, excluding
-    * the producer-assigned leading-drop prefix and filter-rejected rows.
-    * Thread-safe: allocates fresh vectors per chunk, touches no reader state
-    * beyond immutable arrays. */
-  private def buildBatch(rows: Array[Array[XCell]], dropFirst: Int): AnyRef = {
-    val n = rows.length
-    val vectors = colTypes.map(dt =>
-      new OnHeapColumnVector(math.max(1, n - dropFirst), dt))
-    var out = 0
-    var i = dropFirst
-    while (i < n) {
-      val cells = rows(i)
-      if (passes(cells)) { writeRow(vectors, out, cells); out += 1 }
-      i += 1
-    }
-    new ColumnarBatch(vectors.toArray[ColumnVector], out)
-  }
-
-  private val iterE: Either[CellRowIterator, ParallelSheetScanner] =
-    segRange match {
-      case Some(r) =>
-        Left(wb.segmentRangeRowIterator(sheetTarget, r.s0, r.s1).getOrElse(
-          throw new IllegalStateException(
-            s"$path: segment index vanished for range [${r.s0},${r.s1}) — " +
-              "a whole-file fallback would DUPLICATE rows across partitions")))
-      case None if threads >= 2 =>
-        wb.chunkingRowIterator(sheetTarget, threads, buildBatch,
-          resolved.dropRows.toLong, opts.chunkBytes)
-      case None => Left(wb.rowIterator(sheetTarget))
-    }
-  private val seqIter: CellRowIterator = iterE.left.toOption.orNull
-  private val parIter: ParallelSheetScanner = iterE.toOption.orNull
-
-  private var dropped = 0L
-  if (seqIter != null) {
-    while (dropped < effDropRows && seqIter.hasNext) {
-      seqIter.next(); dropped += 1
-    }
-  }
-
-  /** Reused across sequential batches (reset per fill), like the vectorized
-    * parquet reader; worker-built batches are fresh per chunk instead. */
-  private var seqVectors: Array[OnHeapColumnVector] = _
-  private var current: ColumnarBatch = _
-  private var lastIdx = -1L
-
-  override def next(): Boolean = {
-    if (parIter != null) {
-      while (parIter.advanceChunk()) {
-        // metadata walk: stitch implicit row indices across chunks and
-        // ragged-check every non-dropped row (dropped header/skip rows are
-        // exempt, same as the sequential path)
-        val idx = parIter.chunkIdx
-        val expl = parIter.chunkExplicitR
-        val widths = parIter.chunkWidths
-        val exempt = parIter.chunkDropped
-        var i = 0
-        while (i < idx.length) {
-          val abs = if (expl(i)) idx(i) else lastIdx + 1
-          lastIdx = abs
-          if (i >= exempt)
-            XlsxPartitionReader.raggedCheck(abs, widths(i), resolved.baseWidth)
-          i += 1
-        }
-        val b = parIter.chunkBatch.asInstanceOf[ColumnarBatch]
-        if (b.numRows > 0) { current = b; return true }
-        b.close() // zero-row producer tail: skip and keep pulling
-      }
-      false
-    } else {
-      if (seqVectors == null)
-        seqVectors = colTypes.map(dt =>
-          new OnHeapColumnVector(XlsxColumnarPartitionReader.SeqBatchRows, dt))
-      else seqVectors.foreach(_.reset())
-      var out = 0
-      while (out < XlsxColumnarPartitionReader.SeqBatchRows && seqIter.hasNext) {
-        val (rowIdx, cells) = seqIter.next()
-        XlsxPartitionReader.raggedCheck(rowIdx, cells.length, resolved.baseWidth)
-        if (passes(cells)) { writeRow(seqVectors, out, cells); out += 1 }
-      }
-      if (out == 0) false
-      else {
-        current = new ColumnarBatch(seqVectors.toArray[ColumnVector], out)
-        true
-      }
-    }
-  }
-
-  override def get(): ColumnarBatch = current
-  override def close(): Unit =
-    if (parIter != null) parIter.close() else seqIter.close()
-}
-
-object XlsxColumnarPartitionReader {
-  /** Consumer-side batch size for sequential scans: big enough to amortize
-    * the per-batch handoff, small enough that 32 concurrent single-threaded
-    * file tasks × a few live batches stay well inside executor memory. */
-  val SeqBatchRows: Int = 4096
-}
-
-// ---------------------------------------------------------------------------
-// Write path
-// ---------------------------------------------------------------------------
-
-final class XlsxWriteBuilder(path: String, schema: StructType, opts: XlsxOptions)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new XlsxBatchWrite(path, schema, opts, doTruncate)
-  }
-}
-
-final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions, truncate: Boolean)
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // Driver-side: prepare the output directory.
-    val p = new Path(path)
-    val fs = p.getFileSystem(XlsxDataSource.hadoopConf())
-    if (truncate && fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    new XlsxDataWriterFactory(path, schema, opts.writeHeader,
-      opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf())
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final class XlsxDataWriterFactory(path: String, schema: StructType, header: Boolean,
-    sheetName: String, conf: XlsxDataSource.ConfProps)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new XlsxDataWriter(path, schema, header, sheetName, partitionId, taskId, conf)
-}
-
-/** One .xlsx file per write task, streamed row-by-row into the zip. */
-final class XlsxDataWriter(
-    dir: String,
-    schema: StructType,
-    header: Boolean,
-    sheetName: String,
-    partitionId: Int,
-    taskId: Long,
-    conf: XlsxDataSource.ConfProps)
-    extends DataWriter[InternalRow] {
-
-  private val file = new Path(dir, f"part-$partitionId%05d-$taskId.xlsx")
-  private val fs = file.getFileSystem(conf.toConf)
-  private val out = fs.create(file, true)
-  private val sheet = new XlsxWriter.StreamingWorkbookWriter(
-    out, sheetName, if (header) Some(schema.fieldNames.toSeq) else None)
-
-  override def write(record: InternalRow): Unit = {
-    val vs: Seq[Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (record.isNullAt(i)) null
-      else f.dataType match {
-        case StringType  => record.getUTF8String(i).toString
-        case DoubleType  => record.getDouble(i)
-        case FloatType   => record.getFloat(i).toDouble
-        case IntegerType => record.getInt(i)
-        case LongType    => record.getLong(i)
-        case ShortType   => record.getShort(i).toInt
-        case ByteType    => record.getByte(i).toInt
-        case BooleanType => record.getBoolean(i)
-        case DateType    => java.time.LocalDate.ofEpochDay(record.getInt(i).toLong)
-        case other =>
-          throw new IllegalArgumentException(
-            s"xlsx write: unsupported column type $other (supported: " +
-              "string, double/float, int/long/short/byte, boolean, date)")
-      }
-    }.toSeq
-    sheet.addRow(vs)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    sheet.finish()
-    out.close()
-    XlsxCommit(file.toString)
-  }
-
-  override def abort(): Unit = {
-    try { sheet.finish(); out.close() } catch { case _: Throwable => }
-    try fs.delete(file, false) catch { case _: Throwable => }
-  }
-
-  override def close(): Unit = ()
-}
-
-final case class XlsxCommit(path: String) extends WriterCommitMessage

@@ -32,6 +32,7 @@ final case class XlsxOffset(count: Long) extends Offset {
   * is not a shape xlsx has.
   */
 final class XlsxMicroBatchStream(
+    format: SheetFormat,
     fullSchema: StructType,
     required: StructType,
     opts: XlsxOptions,
@@ -69,7 +70,7 @@ final class XlsxMicroBatchStream(
   }
 
   /** Re-glob the scan's original path options against the filesystem. */
-  private def listNow(): Seq[String] = XlsxDataSource.resolvePaths(options)
+  private def listNow(): Seq[String] = format.resolvePaths(options)
 
   override def latestOffset(): Offset = synchronized {
     val conf = XlsxDataSource.hadoopConf()
@@ -115,17 +116,16 @@ final class XlsxMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = synchronized {
     val s = start.asInstanceOf[XlsxOffset].count.toInt
     val e = end.asInstanceOf[XlsxOffset].count.toInt
-    XlsxScan.partitionsFor(seen.slice(s, e).toSeq, opts)
+    format.partitions(seen.slice(s, e).toSeq, opts)
   }
 
-  // columnar = true: micro-batches ride the same ColumnarBatch parse path
-  // as batch scans (Spark plans codegen'd ColumnarToRow above the
-  // streaming scan too) — a 100 TB backfill through readStream must not
-  // pay a slower parse rate than the batch side (r6 pinned columnar to
-  // batch only; parity is spec-asserted now)
+  // micro-batches ride the same ColumnarBatch parse path as batch scans
+  // (Spark plans codegen'd ColumnarToRow above the streaming scan too) — a
+  // 100 TB backfill through readStream must not pay a slower parse rate
+  // than the batch side
   override def createReaderFactory(): PartitionReaderFactory =
-    new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), filters, columnar = true)
+    new SheetReaderFactory(format, fullSchema, required, opts,
+      XlsxDataSource.captureConf(), filters)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -30,13 +30,12 @@ object XCell {
 final case class SheetInfo(name: String, target: String)
 
 /** UTF-16 → UTF-8 transcoding stream (r10): workbooks with a UTF-16 BOM
-  * (never produced by Excel, but legal XML) used to fall back to the StAX
-  * row path — correct, but off the byte scanner AND off the columnar batch
-  * builder. Transcoding the inflated entry on the fly lets UTF-16 sheets
-  * ride the exact same scanner/columnar pipeline as UTF-8 ones: the
-  * scanner matches tags bytewise and never consults the XML prolog's
-  * declared encoding, so the transcoded bytes are indistinguishable from a
-  * native UTF-8 workbook. A truncated trailing surrogate pair is held back
+  * (never produced by Excel, but legal XML) used to fall back to StAX —
+  * correct, but off the byte scanner. Transcoding the inflated entry on
+  * the fly lets UTF-16 sheets ride the exact same scanner/columnar
+  * pipeline as UTF-8 ones: the scanner matches tags bytewise and never
+  * consults the XML prolog's declared encoding, so the transcoded bytes
+  * are indistinguishable from a native UTF-8 workbook. A truncated trailing surrogate pair is held back
   * across chunk boundaries so supplementary-plane text survives intact.
   */
 private[xlsx] final class Utf16ToUtf8Stream(in: InputStream)
@@ -269,23 +268,13 @@ object XlsxParser {
       } finally it.close()
     }
 
-    /** Pull-based row iterator over one worksheet — the shape a Spark DSv2
-      * PartitionReader needs (next()/get() driven from the scan), so the
-      * sheet never has to be buffered in memory. Close() releases the zip
-      * stream; exhausting the iterator also closes it.
-      *
-      * Hot path is the byte-level [[SheetScanner]]; `threads >= 2` engages
-      * the chunked [[ParallelSheetScanner]] (the reference's `threads` knob:
-      * one big workbook parsed by N cores); UTF-16 workbooks transcode on
-      * the fly ([[Utf16ToUtf8Stream]]) and ride the same scanners.
-      */
     /** Open `path` and sniff the encoding BOM once: Left(an iterator for
       * the missing-entry StAX fallback), Right(the positioned byte stream
       * + closer) for the byte scanners. A UTF-16 BOM no longer falls back
       * to StAX (r10): the entry transcodes to UTF-8 on the fly and rides
       * the same scanner + columnar pipeline — the scanner matches tags
       * bytewise and ignores the prolog's declared encoding. The single
-      * copy of this dispatch — rowIterator and convertingRowIterator both
+      * copy of this dispatch — rowIterator and chunkingRowIterator both
       * ride it. */
     private def openSniffed(path: String): Either[CellRowIterator, (InputStream, () => Unit)] =
       openEntryStream(path) match {
@@ -380,6 +369,16 @@ object XlsxParser {
           () => { inf.end(); fis.close() })
       }
 
+    /** Pull-based row iterator over one worksheet — the shape a Spark DSv2
+      * PartitionReader needs (next()/get() driven from the scan), so the
+      * sheet never has to be buffered in memory. Close() releases the zip
+      * stream; exhausting the iterator also closes it.
+      *
+      * Hot path is the byte-level [[SheetScanner]]; `threads >= 2` engages
+      * the chunked [[ParallelSheetScanner]] (the reference's `threads` knob:
+      * one big workbook parsed by N cores); UTF-16 workbooks transcode on
+      * the fly ([[Utf16ToUtf8Stream]]) and ride the same scanners.
+      */
     def rowIterator(path: String, threads: Int = 1): CellRowIterator = {
       if (threads >= 2) segmentIndexFor(path, threads) match {
         case Some(seg) =>
@@ -393,28 +392,6 @@ object XlsxParser {
           if (threads >= 2)
             new ParallelSheetScanner(in, sharedStrings, dateStyles, threads, closeAll)
           else new SheetScanner(in, sharedStrings, dateStyles, closeAll)
-      }
-    }
-
-    /** Parallel row iterator with a WORKER-side per-row transform — the
-      * DSv2 reader passes its cell→Catalyst conversion here so that work
-      * fans out with the parse. Right(parallel scanner, drive with
-      * nextConverted — its raw Iterator face is disabled) on the byte
-      * path; Left(plain iterator) when the entry is missing or UTF-16
-      * (the caller converts on its own thread there). */
-    private[xlsx] def convertingRowIterator(path: String, threads: Int,
-        convert: Array[XCell] => AnyRef,
-        chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes): Either[CellRowIterator, ParallelSheetScanner] = {
-      segmentIndexFor(path, threads).foreach { seg =>
-        return Right(new ParallelSheetScanner(null, sharedStrings, dateStyles,
-          threads, () => (), chunkBytes = chunkBytes, convert = convert,
-          segmented = seg))
-      }
-      openSniffed(path) match {
-        case Left(it) => Left(it)
-        case Right((in, closeAll)) =>
-          Right(new ParallelSheetScanner(in, sharedStrings, dateStyles, threads,
-            closeAll, chunkBytes = chunkBytes, convert = convert))
       }
     }
 
@@ -446,11 +423,6 @@ object XlsxParser {
       * fuzz spec drives this against the byte scanner on identical input. */
     private[xlsx] def rowIteratorStax(path: String): CellRowIterator =
       new RowIterator(openEntry(path), sharedStrings, dateStyles)
-
-    /** Raw inflated entry stream for throughput probes (graft.tools). */
-    def entryStreamForProbe(path: String): (InputStream, () => Unit) =
-      openEntryStream(path).getOrElse(
-        throw new IllegalArgumentException(s"no entry $path"))
 
     final class RowIterator(
         entry: Option[(XMLStreamReader, () => Unit)],

@@ -147,7 +147,8 @@ object XlsxWriter {
     * task writing millions of rows never buffers them).
     */
   final class StreamingWorkbookWriter(
-      out: OutputStream, sheetName: String, header: Option[Seq[String]]) {
+      out: OutputStream, sheetName: String, header: Option[Seq[String]])
+      extends SheetWriter {
     private val zip = new FlushableZipOutputStream(out)
     private val counting = new CountingOutputStream(new NonClosing(zip))
     private val w = {

@@ -32,6 +32,18 @@ object BenchNorm {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
+  /** Raw cross-rep median for one face: the median over reps where it ran
+    * (t >= 0). With `excludeContended`, reps not marked clean are left out
+    * — unless the face ran in no clean rep, when every rep it ran in
+    * counts, so a face never drops out of the results for contention
+    * alone. -1 when the face never ran. */
+  def faceMedian(repTimesSec: Seq[Double], repClean: Seq[Boolean],
+      excludeContended: Boolean): Double = {
+    val ran = repTimesSec.zip(repClean).filter(_._1 >= 0)
+    val clean = if (excludeContended) ran.filter(_._2) else ran
+    median((if (clean.nonEmpty) clean else ran).map(_._1))
+  }
+
   /** Anchor-corrected cross-rep median for one face: each rep's raw time
     * is scaled by nominal/anchor (slow box ⇒ anchor large ⇒ time scaled
     * DOWN), then the median is taken over reps where the face ran

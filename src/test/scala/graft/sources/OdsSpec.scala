@@ -158,6 +158,42 @@ class OdsSpec extends SparkSpec {
     assert(s == (1 to 9000).map(_.toDouble).sum)
   }
 
+  test("filters push into the scan and return the rows Spark's own filter does") {
+    val dir = tempDir().resolve("push").toString
+    (1 to 500).map(i => (i.toDouble, s"r$i", i % 3 == 0)).toDF("x", "name", "flag")
+      .repartition(2).write.format("ods").mode("overwrite").save(dir)
+    val cond = col("x") > 120.0 && col("name").isNotNull
+    val pushed = spark.read.format("ods").load(dir).filter(cond)
+    val plan = pushed.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [") && plan.contains("GreaterThan(x,120.0)"),
+      s"expected pushed filters in the ods scan description:\n$plan")
+    // the unfiltered scan, filtered by Spark over a local copy of its rows
+    val all = spark.read.format("ods").load(dir)
+    val expected = spark.createDataFrame(
+      java.util.Arrays.asList(all.collect(): _*), all.schema).filter(cond)
+    val got = pushed.collect().map(_.toString).sorted.toSeq
+    assert(got.size == 380)
+    assert(got == expected.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("allSheets is rejected at planning, naming the option") {
+    val dir = tempDir()
+    val p = rawOds(dir, "one.ods",
+      """<table:table table:name="S">
+        |<table:table-row><table:table-cell office:value-type="float" office:value="1"/></table:table-row>
+        |</table:table>
+        |""".stripMargin)
+    val inferred = intercept[IllegalArgumentException] {
+      spark.read.format("ods").option("allSheets", "true").load(p).collect()
+    }
+    assert(inferred.getMessage.contains("allSheets"), inferred.getMessage)
+    val supplied = intercept[IllegalArgumentException] {
+      spark.read.format("ods").schema("Numeric0 double")
+        .option("allSheets", "true").load(p).collect()
+    }
+    assert(supplied.getMessage.contains("allSheets"), supplied.getMessage)
+  }
+
   test("ragged row errors; missing table errors") {
     val dir = tempDir()
     val ragged = rawOds(dir, "ragged.ods",

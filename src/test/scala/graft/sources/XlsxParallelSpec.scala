@@ -57,30 +57,42 @@ class XlsxParallelSpec extends SparkSpec {
   }
 
   test("worker-side conversion stitches indices and widths across many chunks") {
-    val wb = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(file), Some(file))
-    val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
-    // tiny chunks force dozens of ParsedChunks through the converted face
-    val par = new ParallelSheetScanner(raw, wb.sharedStrings, wb.dateStyles,
-      threads = 3, closeAll, chunkBytes = 32 << 10,
-      convert = cells => Integer.valueOf(cells.length))
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
-    while (par.hasNext) {
-      val (i, v, w) = par.nextConverted()
-      out += ((i, v.asInstanceOf[Integer].intValue, w))
+    // tiny chunks force dozens of ParsedChunks through the chunk face (two
+    // workers: the streaming producer, not the segment index, cuts them);
+    // the worker-side transform reports the widths of the rows it saw
+    def chunked(): ParallelSheetScanner = {
+      val wb = new XlsxParser.Workbook(
+        () => new java.io.FileInputStream(file), Some(file))
+      wb.chunkingRowIterator("xl/worksheets/sheet1.xml", threads = 2,
+        (rows, _) => rows.map(_.length), chunkBytes = 32 << 10) match {
+        case Right(par) => par
+        case Left(it) => it.close(); fail("expected the parallel chunk face")
+      }
     }
+    val par = chunked()
+    val idx = scala.collection.mutable.ArrayBuffer[Long]()
+    val widths = scala.collection.mutable.ArrayBuffer[Int]()
+    var chunks = 0
+    var last = -1L
+    try while (par.advanceChunk()) {
+      chunks += 1
+      val ci = par.chunkIdx
+      val ex = par.chunkExplicitR
+      ci.indices.foreach { i =>
+        last = if (ex(i)) ci(i) else last + 1
+        idx += last
+      }
+      // the transform saw exactly the rows the metadata describes
+      assert(par.chunkBatch.asInstanceOf[Array[Int]].toSeq == par.chunkWidths.toSeq)
+      widths ++= par.chunkWidths
+    } finally par.close()
     val seq = drain(1)
-    assert(out.size == seq.size)
-    assert(out.map(_._1).toSeq == seq.map(_._1)) // stitched absolute indices
-    assert(out.map(_._3).toSeq == seq.map(_._2.size)) // widths track the cells
-    assert(out.forall(t => t._2 == t._3)) // convert() saw the same rows
-    // the raw Iterator face must refuse, not return garbage
-    val wb2 = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(file), Some(file))
-    val (raw2, closeAll2) = wb2.openEntryStream("xl/worksheets/sheet1.xml").get
-    val par2 = new ParallelSheetScanner(raw2, wb2.sharedStrings, wb2.dateStyles,
-      threads = 2, closeAll2, convert = cells => Integer.valueOf(0))
-    try intercept[UnsupportedOperationException] { par2.next() }
+    assert(chunks > 10, s"only $chunks chunks")
+    assert(idx.toSeq == seq.map(_._1)) // stitched absolute indices
+    assert(widths.toSeq == seq.map(_._2.size)) // widths track the cells
+    // the row faces must refuse, not return garbage
+    val par2 = chunked()
+    try intercept[UnsupportedOperationException] { par2.hasNext }
     finally par2.close()
   }
 

@@ -191,22 +191,6 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
         assert(chunked == stax,
           s"trial $trial chunked(chunkBytes=$cb) diverged\nsheet:\n$sheet\n" +
             s"chunked: $chunked\nstax: $stax")
-
-        // SPECULATIVE-tracking path, forced on with the same tiny block
-        // target: cuts land at literal `</row>` occurrences — including
-        // fake ones inside comments/CDATA/inline text, which the chain
-        // validation must catch and re-track (the fallback IS the point
-        // of this fuzz)
-        val wb4 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
-        val (raw4, closeAll4) =
-          wb4.openEntryStream("xl/worksheets/sheet1.xml").get
-        val spec = new ParallelSheetScanner(raw4, wb4.sharedStrings,
-          wb4.dateStyles, threads = 3, closeAll4, chunkBytes = cb,
-          specTrack = java.lang.Boolean.TRUE)
-        val specRows = drain(spec)
-        assert(specRows == stax,
-          s"trial $trial speculative(chunkBytes=$cb) diverged\nsheet:\n$sheet\n" +
-            s"spec: $specRows\nstax: $stax")
       }
 
       // tracker slice invariance: feeding the SAME bytes in random tiny

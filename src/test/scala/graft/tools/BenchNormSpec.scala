@@ -23,6 +23,19 @@ class BenchNormSpec extends AnyFunSuite {
     assert(BenchNorm.normalizedMedianSec(Seq(-1.0), Seq(70.0)) == -1.0)
   }
 
+  test("faceMedian excludes contended reps, but falls back to all reps " +
+      "when a face ran only in contended ones") {
+    val clean = Seq(true, false, true)
+    // contended rep 1 is left out when asked
+    assert(BenchNorm.faceMedian(Seq(1.0, 9.0, 3.0), clean, excludeContended = false) == 3.0)
+    assert(BenchNorm.faceMedian(Seq(1.0, 9.0, 3.0), clean, excludeContended = true) == 2.0)
+    // failed reps (t < 0) never count
+    assert(BenchNorm.faceMedian(Seq(-1.0, 9.0, 3.0), clean, excludeContended = true) == 3.0)
+    // the face's only timing is from a contended rep: keep it, not -1
+    assert(BenchNorm.faceMedian(Seq(-1.0, 9.0, -1.0), clean, excludeContended = true) == 9.0)
+    assert(BenchNorm.faceMedian(Seq(-1.0, -1.0, -1.0), clean, excludeContended = true) == -1.0)
+  }
+
   test("median: odd takes the middle, even averages the two middles") {
     assert(BenchNorm.median(Seq(3.0, 1.0, 2.0)) == 2.0)
     assert(BenchNorm.median(Seq(4.0, 1.0, 2.0, 3.0)) == 2.5)
